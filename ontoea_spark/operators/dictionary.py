@@ -145,13 +145,6 @@ def _rank_freqs(freqs: DataFrame, range_partitions: int = 32) -> DataFrame:
     )
 
 
-def single_kg_ids(
-    triples: DataFrame, roles: tuple[str, ...] = ("s", "o")
-) -> DataFrame:
-    """D3: one-KG dictionary, id == rank. DataFrame[elem, freq, id]."""
-    return ranked_elements(triples, roles).withColumnRenamed("rank", "id")
-
-
 def _interleave(r1: DataFrame, r2: DataFrame) -> DataFrame:
     """Interleave two ranked frames (read.py:72-83 arithmetic): KG1
     rank-i -> 2i, KG2 rank-i -> 2i+1 for i < min(n1, n2); tails continue
@@ -466,41 +459,6 @@ def encode_triples_two_kg(
         )
         .select("s_id", "p_id", "o_id", "kg")
     )
-
-
-def single_kg_dictionaries(
-    triples: DataFrame,
-    range_partitions: int = 32,
-    with_sizes: bool = False,
-) -> tuple:
-    """D3 for BOTH the entity (roles s/o) and relation (role p)
-    dictionaries of ONE triple set in a single pass — one groupBy count
-    + one range shuffle + one grouped two-phase rank, instead of two
-    full :func:`single_kg_ids` scans of the triple stream.
-
-    Implemented as the one-KG case of :func:`combined_dictionary_frame`
-    (kg ≡ 1): with no partner KG, ``n_other`` coalesces to 0 and the
-    interleave arithmetic degenerates to ``id == rank`` — D3's exact
-    contract — so there is ONE grouped-rank implementation to maintain
-    (review r6: an earlier copy duplicated the two-phase machinery).
-
-    Returns (ent_ids, rel_ids), each DataFrame[elem, freq, id],
-    localCheckpoint-materialized; ``with_sizes=True`` adds (n_ent,
-    n_rel) from one aggregate job (the materializing job) for
-    downstream broadcast gates.
-    """
-    out = combined_dictionary_frame(
-        triples, F.lit(1), range_partitions
-    ).localCheckpoint(eager=not with_sizes)
-    ent = out.filter("grp = 'ent'").select("elem", "freq", "id")
-    rel = out.filter("grp = 'rel'").select("elem", "freq", "id")
-    if with_sizes:
-        sizes = {
-            r["grp"]: r["n"]
-            for r in out.groupBy("grp").agg(F.count("*").alias("n")).collect()
-        }
-        return ent, rel, sizes.get("ent", 0), sizes.get("rel", 0)
-    return ent, rel
 
 
 def encode_pairs(

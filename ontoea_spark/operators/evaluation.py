@@ -117,15 +117,3 @@ def rank_metrics(
     ]
     return ranks.agg(*aggs)
 
-
-def greedy_alignment_pairs(scores: DataFrame) -> DataFrame:
-    """V2 argmax pairs: each lid's best rid by (sim desc, rid asc) — the
-    stable-argsort tie-break. DataFrame[lid, rid, sim]."""
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("lid").orderBy(F.desc("sim"), F.asc("rid"))
-    return (
-        scores.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("lid", "rid", "sim")
-    )

@@ -48,10 +48,6 @@ def parse_entities(triples: DataFrame) -> DataFrame:
     )
 
 
-def parse_relations(triples: DataFrame) -> DataFrame:
-    return triples.select(F.col("p").alias("relation")).distinct()
-
-
 def linked_entity_set(links: DataFrame, side: str) -> DataFrame:
     """Entities appearing on one side of the link table. side in {e1,e2}."""
     return links.select(F.col(side).alias("entity")).distinct()

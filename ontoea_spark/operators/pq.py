@@ -166,25 +166,6 @@ def pq_train_codebooks(
     )
 
 
-def pq_encode(
-    emb: DataFrame,
-    codebooks: DataFrame,
-    m: int,
-    dim: int,
-    id_col: str = "id",
-    vec_col: str = "vec",
-) -> DataFrame:
-    """Assign each subspace its nearest codebook entry: DataFrame[id, j,
-    code]. Argmin by (round(d2, 12), cid) — the assign_cells tie-break,
-    partition-layout-independent."""
-    sv = subvectors(emb, m, dim, id_col, vec_col)
-    scored = sv.join(F.broadcast(codebooks), "j").withColumn(
-        "d2", F.round(_d2("sv", "cvec"), 12)
-    )
-    best = scored.groupBy("id", "j").agg(F.min(F.struct("d2", "cid")).alias("b"))
-    return best.select("id", "j", F.col("b.cid").cast("int").alias("code"))
-
-
 def residualize(
     df: DataFrame,
     cells: DataFrame,

@@ -4,7 +4,10 @@ The north rule's "link and canonicalize entities before materializing"
 stage: ``build_kg`` emits two per-KG triple sets plus (e1, e2) alignment
 links; this module folds the links back into the graph so every aligned
 entity cluster becomes ONE canonical node, then re-encodes the merged
-triple set with a single unified dictionary.
+triple set with a single unified dictionary. :func:`_canonicalize`
+composes that DAG once; ``canonicalize_kg`` materializes it in the
+session, ``pipeline.checkpoint.run_canonicalize_checkpointed`` as
+resumable parquet stages.
 
 Reference counterpart: OntoEA never rewrites the graph — aligned pairs
 only ever share an *id* during training (``generate_sharing_id``,
@@ -38,6 +41,7 @@ the same rewrite as two plain left joins.
 
 from __future__ import annotations
 
+import functools
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
@@ -47,10 +51,11 @@ from ontoea_spark.operators.dictionary import (
     BROADCAST_ROW_THRESHOLD,
     _gated_broadcast,
     anti_join_keep_small,
+    combined_dictionary_frame,
     encode_triples,
-    single_kg_dictionaries,
 )
 from ontoea_spark.operators.graph import connected_components
+from ontoea_spark.pipeline.checkpoint import _InMemory
 
 
 @dataclass
@@ -397,6 +402,95 @@ def materialize_canonical(
     return names
 
 
+def _canonicalize(
+    triples: DataFrame,
+    links: DataFrame,
+    mat,
+    broadcast_threshold: int = BROADCAST_ROW_THRESHOLD,
+) -> dict[str, DataFrame]:
+    """The canonicalization DAG over the (s, p, o) triples of both KGs,
+    stage by stage, materialized by ``mat``
+    (``pipeline.checkpoint._InMemory`` or ``_Snapshots``).
+
+    The unified dictionaries are the one-KG path (D3
+    ``mapping_id_oneKG``, reference read.py:64-69: id == frequency rank)
+    over the CANONICAL triple set — merged nodes rank by their merged
+    frequency, which is exactly the property the downstream
+    adjacency/degree consumers want. Both come from ONE grouped-rank
+    pass (the kg≡1 case of ``combined_dictionary_frame``: with no
+    partner KG the interleave arithmetic degenerates to id == rank).
+    """
+    # the map feeds several joins; its row count (the number of
+    # merged-away entities) decides the broadcast gate
+    mapping = mat.stage(
+        "canonical_map", lambda: canonical_entity_map(links), keep="lazy"
+    )
+    small = mat.rows("canonical_map", mapping) <= broadcast_threshold
+    # eager in memory: the dictionary builder references this frame
+    # from THREE union branches inside its materializing job — lazy
+    # checkpointing here was measured to race-recompute the rewrite
+    # subtree per branch
+    canon = mat.stage(
+        "canonical_triples",
+        lambda: _rewrite_so(triples, mapping, small)
+        .select("s", "p", "o")
+        .distinct(),
+        keep="eager",
+    )
+    # both unified dictionaries from ONE grouped-rank pass; not a stage
+    # of its own, so whichever dictionary stage runs first builds it
+    # (a resume of both builds nothing)
+    dicts = functools.cache(
+        lambda: combined_dictionary_frame(canon, F.lit(1)).localCheckpoint(
+            eager=False
+        )
+    )
+    cols = ["elem", "freq", "id"]
+    ent_ids = mat.stage(
+        "canonical_ent_ids", lambda: dicts().filter("grp = 'ent'").select(*cols)
+    )
+    rel_ids = mat.stage(
+        "canonical_rel_ids", lambda: dicts().filter("grp = 'rel'").select(*cols)
+    )
+    n_ent, n_rel = mat.group_rows(
+        dicts, "grp", {"ent": "canonical_ent_ids", "rel": "canonical_rel_ids"}
+    )
+    edges = mat.stage(
+        "canonical_edges",
+        lambda: encode_triples(
+            canon,
+            ent_ids,
+            rel_ids,
+            broadcast_threshold,
+            ent_small=n_ent <= broadcast_threshold,
+            rel_small=n_rel <= broadcast_threshold,
+        ),
+        cluster_by="s_id",
+    )
+
+    def vertices() -> DataFrame:
+        pre = (
+            triples.select(F.col("s").alias("entity"))
+            .unionAll(triples.select(F.col("o").alias("entity")))
+            .distinct()
+        )
+        prov = vertex_provenance(pre, mapping, broadcast_threshold, small)
+        return (
+            ent_ids.select(F.col("id"), F.col("elem").alias("uri"), F.col("freq"))
+            .join(prov, "uri")
+            .select("id", "uri", "freq", "srcs")
+        )
+
+    return {
+        "canonical_map": mapping,
+        "canonical_triples": canon,
+        "canonical_ent_ids": ent_ids,
+        "canonical_rel_ids": rel_ids,
+        "canonical_edges": edges,
+        "canonical_vertices": mat.stage("canonical_vertices", vertices),
+    }
+
+
 def canonicalize_kg(
     triples1: DataFrame,
     triples2: DataFrame,
@@ -404,54 +498,15 @@ def canonicalize_kg(
     broadcast_threshold: int = BROADCAST_ROW_THRESHOLD,
 ) -> CanonicalKG:
     """Full canonicalization: links -> components -> rewrite -> unified
-    dictionary -> edge/vertex tables.
-
-    The unified dictionary is the one-KG path (D3 ``mapping_id_oneKG``,
-    reference read.py:64-69: id == frequency rank) over the CANONICAL
-    triple set — merged nodes rank by their merged frequency, which is
-    exactly the property the downstream adjacency/degree consumers want.
-    """
-    all_t = triples1.unionByName(triples2)
-    mapping, small = _prepared_map(canonical_entity_map(links), broadcast_threshold)
-    canon = (
-        _rewrite_so(all_t, mapping, small)
-        .select("s", "p", "o")
-        .distinct()
-        # eager: the dictionary builder references this frame from
-        # THREE union branches inside its materializing job — lazy
-        # checkpointing here was measured to race-recompute the rewrite
-        # subtree per branch
-        .localCheckpoint(eager=True)
+    dictionaries -> edge/vertex tables, materialized in the session."""
+    s = _canonicalize(
+        triples1.unionByName(triples2), links, _InMemory(), broadcast_threshold
     )
-    # both unified dictionaries in ONE grouped-rank pass over the
-    # canonical triples (one freq shuffle + one range shuffle instead of
-    # two full single_kg_ids scans), sizes from one aggregate job feeding
-    # the encode joins' broadcast gates (no per-side count jobs)
-    ent_ids, rel_ids, n_ent, n_rel = single_kg_dictionaries(
-        canon, with_sizes=True
-    )
-    edges = encode_triples(
-        canon,
-        ent_ids,
-        rel_ids,
-        broadcast_threshold,
-        ent_small=n_ent <= broadcast_threshold,
-        rel_small=n_rel <= broadcast_threshold,
-    )
-    pre_entities = (
-        all_t.select(F.col("s").alias("entity"))
-        .unionAll(all_t.select(F.col("o").alias("entity")))
-        .distinct()
-    )
-    prov = vertex_provenance(pre_entities, mapping, broadcast_threshold, small)
-    vertices = ent_ids.select(
-        F.col("id"), F.col("elem").alias("uri"), F.col("freq")
-    ).join(prov, "uri").select("id", "uri", "freq", "srcs")
     return CanonicalKG(
-        triples=canon,
-        ent_ids=ent_ids,
-        rel_ids=rel_ids,
-        edges=edges,
-        vertices=vertices,
-        mapping=mapping,
+        triples=s["canonical_triples"],
+        ent_ids=s["canonical_ent_ids"],
+        rel_ids=s["canonical_rel_ids"],
+        edges=s["canonical_edges"],
+        vertices=s["canonical_vertices"],
+        mapping=s["canonical_map"],
     )

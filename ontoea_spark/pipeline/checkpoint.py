@@ -2,7 +2,16 @@
 (BASELINE.json north rule; SURVEY.md §2.13/§4 — the reference's closest
 analogue is the HDF5 conflict-matrix cache, check.py:94-99).
 
-Model: every pipeline stage materializes to parquet under
+One DAG, two ways to materialize it: ``kg_build._construct`` and
+``canonicalize._canonicalize`` compose the construction and the
+canonicalization DAG once, stage by stage, and a materializer decides
+what each stage becomes. :class:`_InMemory` keeps stages in the session
+(``build_kg``, ``canonicalize_kg``); :class:`_Snapshots` writes each one
+through :meth:`CheckpointManager.run_stage`
+(:func:`run_pipeline_checkpointed`, :func:`run_canonicalize_checkpointed`,
+which add only the link fingerprint and drop metrics).
+
+Model: every checkpointed stage materializes to parquet under
 ``<base>/<stage>/`` and appends a manifest entry
 (``<base>/_manifest.json``) recording row count, schema, partition
 count, and wall seconds. On re-run, a stage whose manifest entry exists
@@ -187,98 +196,98 @@ class CheckpointManager:
         return out
 
 
+class _InMemory:
+    """Materialize a DAG's stages inside the session (``build_kg``,
+    ``canonicalize_kg``). A stage stays a lazy plan unless the DAG marks
+    it ``keep``: 'lazy' localCheckpoints it on first use (its
+    materializing action follows right away, or its consumers run one
+    after another), 'eager' materializes it at once (it fans out into
+    several branches of one job, where a lazy checkpoint is recomputed
+    per branch). Sink layout only applies to snapshots; row counts for
+    broadcast gates cost a job."""
+
+    def stage(self, name, fn, keep=None, partition_by=None, cluster_by=None):
+        df = fn()
+        return df if keep is None else df.localCheckpoint(eager=keep == "eager")
+
+    def rows(self, name: str, df: DataFrame) -> int:
+        return df.count()
+
+    def group_rows(
+        self, frame: Callable[[], DataFrame], col: str, stages: dict[str, str]
+    ) -> list[int]:
+        """Row counts of the stages that split ``frame()`` by ``col``
+        value (``stages``: value -> stage name), from one aggregate."""
+        n = {r[col]: r["count"] for r in frame().groupBy(col).count().collect()}
+        return [n.get(v, 0) for v in stages]
+
+
+class _Snapshots:
+    """Materialize every stage as a resumable parquet snapshot through
+    :meth:`CheckpointManager.run_stage`, under ``<stage><suffix>``. A
+    stage with a ``cluster_by`` key is hash-repartitioned on it into
+    ``partitions`` files. Row counts come from the manifest, so broadcast gates and drop
+    metrics cost no job, and a resume of completed stages computes
+    nothing."""
+
+    def __init__(self, cp: CheckpointManager, partitions: int, suffix: str = ""):
+        self.cp = cp
+        self.partitions = partitions
+        self.suffix = suffix
+
+    def name(self, stage: str) -> str:
+        return stage + self.suffix
+
+    def stage(self, name, fn, keep=None, partition_by=None, cluster_by=None):
+        return self.cp.run_stage(
+            self.name(name),
+            fn,
+            partition_by=partition_by,
+            repartition=None if cluster_by is None else (self.partitions, cluster_by),
+        )
+
+    def rows(self, name: str, df: DataFrame | None = None) -> int:
+        return self.cp.manifest()["stages"][self.name(name)]["rows"]
+
+    def group_rows(
+        self, frame: Callable[[], DataFrame], col: str, stages: dict[str, str]
+    ) -> list[int]:
+        return [self.rows(s) for s in stages.values()]
+
+    def record_drops(self, source: str, encoded: str) -> None:
+        """Drop metrics of the encode stage ``encoded`` against the
+        triple stage ``source`` it encodes, recorded once."""
+        stage = self.name(encoded)
+        if "rows_dropped" not in self.cp.manifest()["stages"][stage]:
+            self.cp.record_drop_metrics(
+                stage, rows_in=self.rows(source), rows_out=self.rows(encoded)
+            )
+
+
 def run_pipeline_checkpointed(
     spark: SparkSession,
     pages: DataFrame,
     base_dir: str,
     partitions: int = 32,
 ) -> dict[str, DataFrame]:
-    """The KG-construction DAG as resumable checkpointed stages:
+    """The KG-construction DAG (``kg_build``) with every stage a
+    resumable parquet snapshot:
 
-        pages_text -> triples -> ent_ids/rel_ids -> edges -> vertices/links
+        pages_text -> triples -> dictionaries -> ent_ids/rel_ids
+        -> edges -> vertices/links
 
     Each stage reloads from its snapshot on resume; edges are
     repartitioned by s_id and partitioned by kg at the sink (co-located
     adjacency scans downstream — the Iceberg-shaped layout).
     """
-    from ontoea_spark.operators.dictionary import (
-        combined_dictionary_frame,
-        encode_triples,
-    )
-    from ontoea_spark.pipeline.extract import extract_pages_text, extract_triples
-    from ontoea_spark.pipeline.kg_build import gold_links, split_two_kgs
+    from ontoea_spark.pipeline.kg_build import _construct
 
     cp = CheckpointManager(spark, base_dir)
-
-    docs_text = cp.run_stage(
-        "pages_text", lambda: split_two_kgs(extract_pages_text(pages))
-    )
-    triples = cp.run_stage(
-        "triples",
-        lambda: extract_triples(
-            docs_text.filter(F.col("kg") == "kg1"), namespace_col="kg"
-        )
-        .withColumn("kgn", F.lit(1).cast("long"))
-        .unionByName(
-            extract_triples(
-                docs_text.filter(F.col("kg") == "kg2"), namespace_col="kg"
-            ).withColumn("kgn", F.lit(2).cast("long"))
-        ),
-    )
-    t1 = triples.filter("kgn = 1").select("s", "p", "o")
-    t2 = triples.filter("kgn = 2").select("s", "p", "o")
-    # one pass over the triple snapshot builds BOTH dictionaries for
-    # BOTH KGs (values identical to per-call interleaved_ids — parity
-    # tested); the ent/rel stages are then cheap filters of the snapshot
-    dicts = cp.run_stage(
-        "dictionaries",
-        lambda: combined_dictionary_frame(triples, F.col("kgn")),
-    )
-    cols = ["kg", "elem", "freq", "rank", "id"]
-    ent_ids = cp.run_stage(
-        "ent_ids", lambda: dicts.filter("grp = 'ent'").select(*cols)
-    )
-    rel_ids = cp.run_stage(
-        "rel_ids", lambda: dicts.filter("grp = 'rel'").select(*cols)
-    )
-
-    def _edges() -> DataFrame:
-        e = (
-            encode_triples(t1, ent_ids.filter("kg = 1"), rel_ids.filter("kg = 1"))
-            .withColumn("kg", F.lit(1).cast("long"))
-            .unionByName(
-                encode_triples(
-                    t2, ent_ids.filter("kg = 2"), rel_ids.filter("kg = 2")
-                ).withColumn("kg", F.lit(2).cast("long"))
-            )
-        )
-        return e
-
-    edges = cp.run_stage(
-        "edges", _edges, partition_by="kg", repartition=(partitions, "s_id")
-    )
-    if "rows_dropped" not in cp.manifest()["stages"].get("edges", {}):
-        cp.record_drop_metrics(
-            "edges", rows_in=t1.count() + t2.count(), rows_out=edges.count()
-        )
-    vertices = cp.run_stage(
-        "vertices",
-        lambda: ent_ids.select(
-            "id", F.col("elem").alias("uri"), "kg", "freq"
-        ),
-        partition_by="kg",
-    )
-    links = cp.run_stage("links", lambda: gold_links(t1, t2))
-    return {
-        "pages_text": docs_text,
-        "triples": triples,
-        "ent_ids": ent_ids,
-        "rel_ids": rel_ids,
-        "edges": edges,
-        "vertices": vertices,
-        "links": links,
-        "_manager": cp,
-    }
+    snap = _Snapshots(cp, partitions)
+    out = _construct(pages, snap)
+    snap.record_drops("triples", "edges")
+    del out["dictionaries"]
+    return {**out, "_manager": cp}
 
 
 def run_canonicalize_checkpointed(
@@ -286,12 +295,12 @@ def run_canonicalize_checkpointed(
     links: DataFrame | None = None,
     partitions: int = 32,
 ) -> dict[str, DataFrame]:
-    """Canonicalization (pipeline/canonicalize.py) as resumable stages on
-    top of a completed :func:`run_pipeline_checkpointed` build:
+    """The canonicalization DAG (``pipeline/canonicalize.py``) as
+    resumable stages on top of a completed
+    :func:`run_pipeline_checkpointed` build:
 
         canonical_map -> canonical_triples -> canonical dictionaries
-        -> canonical_edges (partitioned, s_id-repartitioned) /
-           canonical_vertices
+        -> canonical_edges (s_id-repartitioned) / canonical_vertices
 
     ``links``: the (e1, e2) pair table to merge on — the build's own
     gold links by default, or predicted matches from the alignment
@@ -307,17 +316,11 @@ def run_canonicalize_checkpointed(
     reusing a canonical graph built from the other link set.
     """
     from ontoea_spark.functions.hashing import portable_hash64
-    from ontoea_spark.operators.dictionary import encode_triples, single_kg_ids
-    from ontoea_spark.pipeline.canonicalize import (
-        canonical_entity_map,
-        rewrite_triples,
-        vertex_provenance,
-    )
+    from ontoea_spark.pipeline.canonicalize import _canonicalize
 
     cp: CheckpointManager = build["_manager"]
     if links is None:
         links = build["links"]
-    t = build["triples"].select("s", "p", "o")
 
     fp_row = links.agg(
         F.count("*").alias("n"),
@@ -325,61 +328,12 @@ def run_canonicalize_checkpointed(
     ).first()
     fp = f"{fp_row['n']}_{(fp_row['h'] or 0) & 0xFFFFFFFFFFFF:x}"
 
-    def _st(name: str) -> str:
-        return f"{name}_{fp}"
-
-    cmap = cp.run_stage(_st("canonical_map"), lambda: canonical_entity_map(links))
-    canon = cp.run_stage(
-        _st("canonical_triples"), lambda: rewrite_triples(t, cmap)
-    )
-    cent = cp.run_stage(_st("canonical_ent_ids"), lambda: single_kg_ids(canon))
-    crel = cp.run_stage(
-        _st("canonical_rel_ids"), lambda: single_kg_ids(canon, roles=("p",))
-    )
-    cedges = cp.run_stage(
-        _st("canonical_edges"),
-        lambda: encode_triples(canon, cent, crel),
-        repartition=(partitions, "s_id"),
-    )
-    if "rows_dropped" not in cp.manifest()["stages"].get(
-        _st("canonical_edges"), {}
-    ):
-        cp.record_drop_metrics(
-            _st("canonical_edges"), rows_in=canon.count(), rows_out=cedges.count()
-        )
-
-    def _vertices() -> DataFrame:
-        pre = (
-            t.select(F.col("s").alias("entity"))
-            .unionAll(t.select(F.col("o").alias("entity")))
-            .distinct()
-        )
-        prov = vertex_provenance(pre, cmap)
-        return (
-            cent.select(F.col("id"), F.col("elem").alias("uri"), F.col("freq"))
-            .join(prov, "uri")
-            .select("id", "uri", "freq", "srcs")
-        )
-
-    cverts = cp.run_stage(_st("canonical_vertices"), _vertices)
+    snap = _Snapshots(cp, partitions, suffix=f"_{fp}")
+    out = _canonicalize(build["triples"].select("s", "p", "o"), links, snap)
+    snap.record_drops("canonical_triples", "canonical_edges")
     return {
-        "canonical_map": cmap,
-        "canonical_triples": canon,
-        "canonical_ent_ids": cent,
-        "canonical_rel_ids": crel,
-        "canonical_edges": cedges,
-        "canonical_vertices": cverts,
+        **out,
         "link_fingerprint": fp,
-        "_stage_names": {
-            n: _st(n)
-            for n in (
-                "canonical_map",
-                "canonical_triples",
-                "canonical_ent_ids",
-                "canonical_rel_ids",
-                "canonical_edges",
-                "canonical_vertices",
-            )
-        },
+        "_stage_names": {n: snap.name(n) for n in out},
         "_manager": cp,
     }

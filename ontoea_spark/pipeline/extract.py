@@ -19,7 +19,6 @@ frames select only what downstream needs.
 
 from __future__ import annotations
 
-import re
 from collections.abc import Iterator
 
 import pandas as pd
@@ -29,21 +28,8 @@ from pyspark.sql import types as T
 
 from ontoea_spark.functions.text import TRIPLE_PATTERN
 
-_BODY_RE = re.compile(rb"<p>(.*?)</p>", re.DOTALL)
-
-
-def _extract_text_from_html(html: bytes) -> str:
-    """Pure html->text: contents of the first <p> element, utf-8 decoded.
-
-    Deterministic per input bytes; returns '' when no body is found.
-    """
-    m = _BODY_RE.search(html)
-    return m.group(1).decode("utf-8") if m else ""
-
-
-# RE2 pattern equivalent to _BODY_RE ((?s) == re.DOTALL; leftmost
-# shortest match semantics agree between RE2 and Python re for this
-# pattern — asserted by test_extract_vectorized_parity).
+# the page body: contents of the first <p> element ((?s): '.' spans
+# newlines; leftmost shortest match, the same in RE2 and Java regex).
 _BODY_RE2 = r"(?s)<p>(?P<body>.*?)</p>"
 
 
@@ -91,7 +77,7 @@ def extract_pages_text(pages: DataFrame, use_udf: bool = False) -> DataFrame:
         text = extract_text_udf(F.col("html"))
     else:
         # Java regex: (?s) == re.DOTALL; leftmost shortest match —
-        # identical semantics to _BODY_RE / the UDF's RE2 pattern for
+        # identical semantics to the UDF's RE2 pattern for
         # this grammar (parity asserted in tests/test_entry.py and the
         # extract_fidelity oracle)
         text = F.regexp_extract(

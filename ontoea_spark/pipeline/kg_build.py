@@ -1,16 +1,26 @@
-"""End-to-end KG construction DAG (the rebuild of SURVEY.md §3.2).
+"""End-to-end KG construction DAG (the rebuild of SURVEY.md §3.2),
+composed once in :func:`_construct`:
 
 pages (url, warc_ts, html, text, lang)
-  -> extract text (Arrow UDF; byte-identical per url)
-  -> mention detection -> (s, p, o) per KG (lang-split: 'en' -> kg1,
-     rest -> kg2 — the two-corpus analogue of OpenEA's two KGs)
-  -> dedup (set semantics) -> deterministic interleaved dictionary ids
-  -> edge table (s_id, p_id, o_id, kg) + vertex table (id, uri, kg, freq)
-  -> gold alignment links (shared surface form across KGs)
+  -> pages_text: extracted text tagged with its KG (lang-split: 'en' ->
+     kg1, rest -> kg2 — the two-corpus analogue of OpenEA's two KGs)
+  -> triples: mention detection -> namespaced (s, p, o, kgn), ONE
+     extraction + dedup pass for both KGs (set semantics)
+  -> dictionaries: both deterministic interleaved dictionaries of both
+     KGs in one grouped-rank pass -> ent_ids / rel_ids
+  -> edges (s_id, p_id, o_id, kg) + vertices (id, uri, kg, freq)
+  -> links: gold alignment (shared surface form across KGs)
 
-Everything below the UDF is JVM-side; the only shuffles are the dedup,
-the dictionary count/rank, and the final repartition-by-key for the
-partitioned sinks. Broadcast joins everywhere a dictionary is involved.
+The DAG has two ways to be materialized (``pipeline/checkpoint.py``):
+:func:`build_kg` keeps its stages in the session (lazy plans, local
+checkpoints where a stage is shared), ``run_pipeline_checkpointed``
+writes every stage as a resumable parquet snapshot. Either way the
+stages compute the same values.
+
+Everything is JVM-side; the only shuffles are the dedup, the dictionary
+count/rank, and (for snapshots) the repartition-by-key of the
+partitioned sinks. The encode joins broadcast the dictionaries while
+they fit the row-count gate.
 """
 
 from __future__ import annotations
@@ -22,9 +32,10 @@ from pyspark.sql import functions as F
 
 from ontoea_spark.operators.dictionary import (
     BROADCAST_ROW_THRESHOLD,
+    combined_dictionary_frame,
     encode_triples_two_kg,
-    two_kg_dictionaries,
 )
+from ontoea_spark.pipeline.checkpoint import _InMemory
 from ontoea_spark.pipeline.extract import extract_pages_text, extract_triples
 
 
@@ -62,76 +73,96 @@ def gold_links(triples1: DataFrame, triples2: DataFrame) -> DataFrame:
     return e1.join(e2, "w").select("e1", "e2")
 
 
-def build_kg(pages: DataFrame) -> KGBuildResult:
-    docs_text = extract_pages_text(pages)
-    tagged = split_two_kgs(docs_text)
-    # ONE extraction + dedup pass over the corpus (the kg tag rides along
-    # in the namespace prefix, so a single distinct covers both KGs),
-    # shared by every downstream branch (dictionaries, edges, links).
-    # Lazy localCheckpoint instead of cache(): same one-materialization
-    # sharing, but consumers' plans are truncated to the materialized
-    # RDD — measured ~0.8s faster on the cold end-to-end pipeline pass
-    # (cache keeps the full extraction lineage in every consumer plan)
-    all_triples = extract_triples(
-        tagged.select("kg", "text"), namespace_col="kg"
-    ).localCheckpoint(eager=False)
-    triples1 = all_triples.filter(F.col("s").startswith("kg1:"))
-    triples2 = all_triples.filter(F.col("s").startswith("kg2:"))
+def _pages_text(pages: DataFrame) -> DataFrame:
+    """pages -> (url, warc_ts, lang, text, kg)."""
+    return split_two_kgs(extract_pages_text(pages))
+
+
+def _kg_triples(pages_text: DataFrame) -> DataFrame:
+    """Tagged text -> distinct (s, p, o, kgn) of BOTH KGs in one
+    extraction + dedup pass: the kg tag rides along in the namespace
+    prefix, so one distinct covers both KGs and the prefix names each
+    triple's KG (kgn 1 for 'kg1:', 2 otherwise)."""
+    t = extract_triples(pages_text.select("kg", "text"), namespace_col="kg")
+    kgn = F.when(F.col("s").startswith("kg1:"), F.lit(1)).otherwise(F.lit(2))
+    return t.withColumn("kgn", kgn.cast("long"))
+
+
+def _per_kg(triples: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The (s, p, o) triples of kg1 and of kg2."""
+    return tuple(
+        triples.filter(F.col("kgn") == n).select("s", "p", "o") for n in (1, 2)
+    )
+
+
+def _construct(pages: DataFrame, mat) -> dict[str, DataFrame]:
+    """The construction DAG, stage by stage, materialized by ``mat``
+    (``pipeline.checkpoint._InMemory`` or ``_Snapshots``)."""
+    text = mat.stage("pages_text", lambda: _pages_text(pages))
+    # shared by every downstream branch (dictionaries, edges, links);
+    # in memory a lazy localCheckpoint, not cache(): consumers' plans
+    # are truncated to the materialized RDD — measured ~0.8s faster on
+    # the cold end-to-end pass (cache keeps the full extraction lineage
+    # in every consumer plan)
+    triples = mat.stage("triples", lambda: _kg_triples(text), keep="lazy")
     # both dictionaries for both KGs in ONE pass over the triple stream
-    # (one freq shuffle + one range shuffle instead of four of each);
-    # with_sizes feeds the encode joins' broadcast gates from one
-    # aggregate job instead of one count job per dictionary per call
-    kg_expr = F.when(F.col("s").startswith("kg1:"), F.lit(1)).otherwise(F.lit(2))
-    ent_ids, rel_ids, n_ent, n_rel = two_kg_dictionaries(
-        all_triples, kg_expr, with_sizes=True
+    # (one freq shuffle + one range shuffle instead of four of each)
+    dicts = mat.stage(
+        "dictionaries",
+        lambda: combined_dictionary_frame(triples, F.col("kgn")),
+        keep="lazy",
+    )
+    cols = ["kg", "elem", "freq", "rank", "id"]
+    ent_ids = mat.stage("ent_ids", lambda: dicts.filter("grp = 'ent'").select(*cols))
+    rel_ids = mat.stage("rel_ids", lambda: dicts.filter("grp = 'rel'").select(*cols))
+    # the encode joins' broadcast gates, without a count job per side
+    n_ent, n_rel = mat.group_rows(
+        lambda: dicts, "grp", {"ent": "ent_ids", "rel": "rel_ids"}
     )
     # one-pass encode of BOTH KGs: three gated-broadcast joins total
     # (the per-KG encode pair costs six and scans the triples twice)
-    edges = encode_triples_two_kg(
-        all_triples.withColumn("kgn", kg_expr),
-        ent_ids,
-        rel_ids,
-        ent_small=n_ent <= BROADCAST_ROW_THRESHOLD,
-        rel_small=n_rel <= BROADCAST_ROW_THRESHOLD,
+    edges = mat.stage(
+        "edges",
+        lambda: encode_triples_two_kg(
+            triples,
+            ent_ids,
+            rel_ids,
+            ent_small=n_ent <= BROADCAST_ROW_THRESHOLD,
+            rel_small=n_rel <= BROADCAST_ROW_THRESHOLD,
+        ),
+        partition_by="kg",
+        cluster_by="s_id",
     )
-    vertices = ent_ids.select(
-        F.col("id"), F.col("elem").alias("uri"), F.col("kg"), F.col("freq")
+    vertices = mat.stage(
+        "vertices",
+        lambda: ent_ids.select(
+            F.col("id"), F.col("elem").alias("uri"), F.col("kg"), F.col("freq")
+        ),
+        partition_by="kg",
     )
-    links = gold_links(triples1, triples2)
+    links = mat.stage("links", lambda: gold_links(*_per_kg(triples)))
+    return {
+        "pages_text": text,
+        "triples": triples,
+        "dictionaries": dicts,
+        "ent_ids": ent_ids,
+        "rel_ids": rel_ids,
+        "edges": edges,
+        "vertices": vertices,
+        "links": links,
+    }
+
+
+def build_kg(pages: DataFrame) -> KGBuildResult:
+    """The construction DAG, materialized in the session."""
+    s = _construct(pages, _InMemory())
+    triples1, triples2 = _per_kg(s["triples"])
     return KGBuildResult(
         triples1=triples1,
         triples2=triples2,
-        ent_ids=ent_ids,
-        rel_ids=rel_ids,
-        edges=edges,
-        vertices=vertices,
-        links=links,
+        ent_ids=s["ent_ids"],
+        rel_ids=s["rel_ids"],
+        edges=s["edges"],
+        vertices=s["vertices"],
+        links=s["links"],
     )
-
-
-def materialize(
-    result: KGBuildResult, out_dir: str, partitions: int = 32
-) -> dict[str, str]:
-    """Write partitioned edge/vertex parquet tables (Iceberg-shaped layout:
-    edges partitioned by kg, repartitioned on s_id so downstream
-    adjacency scans are co-located). Returns path map."""
-    from ontoea_spark.sources.tables import write_edges
-
-    paths = {
-        "edges": f"{out_dir}/edges",
-        "vertices": f"{out_dir}/vertices",
-        "links": f"{out_dir}/links",
-    }
-    # format dispatch (iceberg iff a catalog is configured) lives in
-    # sources/tables.py; everything below it only sees DataFrames
-    write_edges(
-        result.edges.repartition(partitions, "s_id"), paths["edges"]
-    )
-    (
-        result.vertices.repartition(max(partitions // 4, 1), "id")
-        .write.mode("overwrite")
-        .partitionBy("kg")
-        .parquet(paths["vertices"])
-    )
-    result.links.write.mode("overwrite").parquet(paths["links"])
-    return paths

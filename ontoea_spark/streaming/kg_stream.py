@@ -1,8 +1,8 @@
 """Streaming incremental KG construction — the flagship pipeline as a
 stream (rebuild surface; the reference is batch-only, SURVEY.md §2.13).
 
-Each micro-batch of crawled pages runs the SAME extraction expressions
-as the batch DAG (``pipeline.kg_build``), then folds the resulting
+Each micro-batch of crawled pages runs the batch DAG's own extraction
+step (``pipeline.kg_build``), then folds the resulting
 triples into the persisted graph with ``pipeline.incremental.
 incremental_update`` — frozen existing ids, appended unseen ids,
 O(delta + one scan) edge merge. The stream therefore converges to the
@@ -103,12 +103,10 @@ def ingest_pages_batch(
     dictionary rows (id above the parent max — frozen-append makes that
     a range filter) and the NOVEL edges are written; the graph itself is
     never rewritten."""
-    from ontoea_spark.pipeline.extract import extract_pages_text, extract_triples
     from ontoea_spark.pipeline.incremental import incremental_update
-    from ontoea_spark.pipeline.kg_build import split_two_kgs
+    from ontoea_spark.pipeline.kg_build import _kg_triples, _pages_text
 
-    tagged = split_two_kgs(extract_pages_text(pages))
-    triples = extract_triples(tagged.select("kg", "text"), namespace_col="kg")
+    triples = _kg_triples(_pages_text(pages))
     state = read_kg_state(spark, state_dir, before=batch_id)
     ent, rel, edges = state if state is not None else _empty_state(spark)
     # parent max ids: tiny aggregates over the dictionary union — the
@@ -119,8 +117,8 @@ def ingest_pages_batch(
         ent,
         rel,
         edges,
-        triples.select("s", "p", "o"),
-        F.when(F.col("s").startswith("kg1:"), F.lit(1)).otherwise(F.lit(2)),
+        triples,
+        F.col("kgn"),
     )
     base = os.path.join(state_dir, f"v{batch_id}")
     for name, df in (

@@ -3,8 +3,8 @@
 
 Two front doors, one core:
 
-* :func:`prepare_from_pages` — the web corpus path: pages -> build_kg
-  (extract/dedup/encode) -> crossview fixture;
+* :func:`prepare_from_build` — the web corpus path: the triples and
+  gold links of a KG build (pipeline/kg_build.py) -> crossview fixture;
 * :func:`prepare_from_parts` — any two triple sets + gold links + cv
   links (used by the D-W-15K-style synthetic benchmark, benchgen.py).
 
@@ -175,17 +175,21 @@ def prepare_from_parts(
     )
 
 
-def prepare_from_pages(spark: SparkSession, pages: DataFrame) -> AlignmentData:
-    """Web-corpus path: extraction pipeline feeds the same core."""
-    from ontoea_spark.pipeline.kg_build import build_kg
+def prepare_from_build(
+    spark: SparkSession, triples: DataFrame, links: DataFrame
+) -> AlignmentData:
+    """Web-corpus path: a KG build's ``triples`` (s, p, o, kgn) and gold
+    ``links`` feed the same core, with the class view the fixture's
+    surface forms imply."""
+    from ontoea_spark.pipeline.kg_build import _per_kg
 
-    kg = build_kg(pages)
+    triples1, triples2 = _per_kg(triples)
     word = F.expr("substr(entity, 5)")
-    ents1 = kg.triples1.selectExpr("s AS entity").union(
-        kg.triples1.selectExpr("o")
+    ents1 = triples1.selectExpr("s AS entity").union(
+        triples1.selectExpr("o")
     ).distinct()
-    ents2 = kg.triples2.selectExpr("s AS entity").union(
-        kg.triples2.selectExpr("o")
+    ents2 = triples2.selectExpr("s AS entity").union(
+        triples2.selectExpr("o")
     ).distinct()
     cv = (
         ents1.filter(F.length(word) > 5)
@@ -197,7 +201,7 @@ def prepare_from_pages(spark: SparkSession, pages: DataFrame) -> AlignmentData:
             )
         )
     )
-    return prepare_from_parts(spark, kg.triples1, kg.triples2, kg.links, cv)
+    return prepare_from_parts(spark, triples1, triples2, links, cv)
 
 
 def train(data: AlignmentData, cfg: TrainConfig | None = None) -> OntoEATrainer:
@@ -521,17 +525,6 @@ def seed_matches(data: AlignmentData) -> DataFrame:
         F.col("id").alias("id2"), F.col("elem").alias("e2")
     )
     return seeds.join(d1, "id1").join(d2, "id2").select("e1", "e2")
-
-
-def run_alignment(
-    spark: SparkSession,
-    pages: DataFrame,
-    cfg: TrainConfig | None = None,
-    gamma: float = 0.2,
-) -> DataFrame:
-    data = prepare_from_pages(spark, pages)
-    model = train(data, cfg)
-    return evaluate(spark, data, model, gamma=gamma)
 
 
 def run_benchmark_alignment(

@@ -102,14 +102,14 @@ def main(argv: list[str] | None = None) -> None:
         from ontoea_spark.training.align_pipeline import (
             evaluate_candidates,
             predict_matches,
-            prepare_from_pages,
+            prepare_from_build,
             seed_matches,
             train,
         )
         from ontoea_spark.training.trainer import TrainConfig
 
         t1 = time.perf_counter()
-        data = prepare_from_pages(spark, pages)
+        data = prepare_from_build(spark, out["triples"], out["links"])
         cfg = TrainConfig(
             dim=args.align_dim,
             epochs=args.align_epochs,
@@ -180,13 +180,10 @@ def main(argv: list[str] | None = None) -> None:
             from ontoea_spark.pipeline.canonicalize import (
                 canonical_triple_provenance,
             )
-            from ontoea_spark.pipeline.extract import extract_pages_text
-            from ontoea_spark.pipeline.kg_build import split_two_kgs
             from ontoea_spark.sources.tables import write_day_partitioned
 
-            tagged = split_two_kgs(extract_pages_text(pages))
             prov = canonical_triple_provenance(
-                tagged, canon["canonical_map"], namespace_col="kg"
+                out["pages_text"], canon["canonical_map"], namespace_col="kg"
             )
             prov_path = os.path.join(
                 args.checkpoint_dir, "canonical_tables", "provenance"

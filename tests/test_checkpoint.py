@@ -190,3 +190,68 @@ def test_canonicalize_checkpointed_resume(spark, pages, tmp_path):
     canon2 = run_canonicalize_checkpointed(build, links=half_links, partitions=4)
     assert canon2["link_fingerprint"] != canon["link_fingerprint"]
     assert canon2["canonical_map"].count() == half_links.count()
+
+
+@pytest.fixture(scope="module")
+def completed(spark, tmp_path_factory):
+    """One checkpointed build + gold-link canonicalization, run to
+    completion on the smoke fixture."""
+    from ontoea_spark.pipeline.checkpoint import (
+        run_canonicalize_checkpointed,
+        run_pipeline_checkpointed,
+    )
+    from ontoea_spark.pipeline.pages import synthesize_pages
+
+    pages = synthesize_pages(spark.read.parquet(f"{SF_SMOKE}/documents.parquet"))
+    base = str(tmp_path_factory.mktemp("cp_full") / "cp")
+    build = run_pipeline_checkpointed(spark, pages, base, partitions=4)
+    canon = run_canonicalize_checkpointed(build, partitions=4)
+    return pages, base, build, canon
+
+
+def test_checkpointed_build_matches_in_memory(completed):
+    """The snapshot-materialized DAG (run_job.py's path) and the
+    in-memory one (build_kg + canonicalize_kg) produce the same tables,
+    dictionary ids included."""
+    from ontoea_spark.pipeline.canonicalize import canonicalize_kg
+    from ontoea_spark.pipeline.kg_build import build_kg
+
+    pages, _base, build, canon = completed
+    kg = build_kg(pages)
+    ck = canonicalize_kg(kg.triples1, kg.triples2, kg.links)
+    pairs = {
+        "edges": (build["edges"], kg.edges),
+        "ent_ids": (build["ent_ids"], kg.ent_ids),
+        "rel_ids": (build["rel_ids"], kg.rel_ids),
+        "vertices": (build["vertices"], kg.vertices),
+        "links": (build["links"], kg.links),
+        "canonical_edges": (canon["canonical_edges"], ck.edges),
+        "canonical_vertices": (canon["canonical_vertices"], ck.vertices),
+        "canonical_ent_ids": (canon["canonical_ent_ids"], ck.ent_ids),
+        "canonical_rel_ids": (canon["canonical_rel_ids"], ck.rel_ids),
+    }
+    for name, (got, want) in pairs.items():
+        # snapshots move a partition column to the end: compare by name
+        rows = [
+            sorted(tuple(r) for r in df.select(*want.columns).collect())
+            for df in (got, want)
+        ]
+        assert rows[0], name
+        assert rows[0] == rows[1], name
+
+
+def test_full_resume_recomputes_nothing(spark, completed):
+    """Re-running the build and the canonicalization on a completed
+    directory reloads every stage: no manifest entry changes."""
+    from ontoea_spark.pipeline.checkpoint import (
+        CheckpointManager,
+        run_canonicalize_checkpointed,
+        run_pipeline_checkpointed,
+    )
+
+    pages, base, _build, canon = completed
+    before = CheckpointManager(spark, base).manifest()
+    assert set(canon["_stage_names"].values()) <= set(before["stages"])
+    build = run_pipeline_checkpointed(spark, pages, base, partitions=4)
+    run_canonicalize_checkpointed(build, partitions=4)
+    assert CheckpointManager(spark, base).manifest() == before
