@@ -79,13 +79,22 @@ class _HadoopFS:
             stream.close()
         # rename onto the final name (delete-then-rename: HDFS rename
         # does not overwrite)
-        if self.exists(p):
-            self._fs.delete(self._path(p), False)
-        self._fs.rename(self._path(tmp), self._path(p))
+        self.delete(p)
+        self.rename(tmp, p)
 
     def listdir(self, p: str) -> list[str]:
         statuses = self._fs.listStatus(self._path(p))
         return [st.getPath().getName() for st in statuses]
+
+    def delete(self, p: str) -> None:
+        """Remove a file or a whole directory tree; a missing path is a
+        no-op."""
+        self._fs.delete(self._path(p), True)
+
+    def rename(self, src: str, dst: str) -> None:
+        # FileSystem.rename reports most failures as False, not an error
+        if not self._fs.rename(self._path(src), self._path(dst)):
+            raise OSError(f"rename {src} -> {dst} failed")
 
     def is_dir(self, p: str) -> bool:
         return self.exists(p) and bool(self._fs.getFileStatus(self._path(p)).isDirectory())

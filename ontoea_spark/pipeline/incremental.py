@@ -30,7 +30,12 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ontoea_spark.operators.dictionary import _rank_freqs
+from ontoea_spark.operators.dictionary import (
+    BROADCAST_ROW_THRESHOLD,
+    _rank_freqs,
+    anti_join_keep_small,
+    encode_triples_two_kg,
+)
 
 
 @dataclass
@@ -67,11 +72,6 @@ def extend_dictionary(
     anti-join against the matched keys; past the gate (a backfill) it
     degrades to the shuffled anti-join.
     """
-    from ontoea_spark.operators.dictionary import (
-        BROADCAST_ROW_THRESHOLD,
-        anti_join_keep_small,
-    )
-
     if broadcast_threshold is None:
         broadcast_threshold = BROADCAST_ROW_THRESHOLD
     freqs = delta_occurrences.groupBy("kg", "elem").agg(
@@ -112,7 +112,7 @@ def incremental_update(
     edges: DataFrame,
     delta_triples: DataFrame,
     kg_expr,
-    broadcast_threshold: int = 5_000_000,
+    broadcast_threshold: int = BROADCAST_ROW_THRESHOLD,
 ) -> IncrementalResult:
     """Fold a delta triple batch (s, p, o) into an existing encoded KG.
 
@@ -120,31 +120,29 @@ def incremental_update(
     Existing ids are frozen; delta edges are encoded against the merged
     dictionaries and appended.
 
-    ``broadcast_threshold``: max deduped-delta row count for the
-    broadcast merge path. Small deltas (the normal ingest regime) take
+    ``broadcast_threshold``: the one row-count gate of every broadcast
+    in the fold — the unseen-element checks, the delta encode and the
+    merge. Small deltas (the normal ingest regime) take
     the broadcast semi/anti plan — one scan of ``edges``, no exchange.
     A larger delta (a backfill) would OOM the driver if force-broadcast,
     so above the threshold the merge degrades gracefully to a plain
     shuffled anti-join of the delta against the edge table.
     """
-    from ontoea_spark.operators.dictionary import encode_triples
-
     d = delta_triples.select(kg_expr.cast("long").alias("kg"), "s", "p", "o")
     d = d.localCheckpoint(eager=True)
     ent_occ = d.select("kg", F.col("s").alias("elem")).unionAll(
         d.select("kg", F.col("o").alias("elem"))
     )
     rel_occ = d.select("kg", F.col("p").alias("elem"))
-    ent2 = extend_dictionary(ent_ids, ent_occ).localCheckpoint(eager=True)
-    rel2 = extend_dictionary(rel_ids, rel_occ).localCheckpoint(eager=True)
-    new_edges = None
-    for kg in (1, 2):
-        enc = encode_triples(
-            d.filter(F.col("kg") == kg).select("s", "p", "o"),
-            ent2.filter(F.col("kg") == kg),
-            rel2.filter(F.col("kg") == kg),
-        ).withColumn("kg", F.lit(kg).cast("long"))
-        new_edges = enc if new_edges is None else new_edges.unionByName(enc)
+    ent2 = extend_dictionary(ent_ids, ent_occ, broadcast_threshold).localCheckpoint(
+        eager=True
+    )
+    rel2 = extend_dictionary(rel_ids, rel_occ, broadcast_threshold).localCheckpoint(
+        eager=True
+    )
+    new_edges = encode_triples_two_kg(
+        d, ent2, rel2, kg_col="kg", broadcast_threshold=broadcast_threshold
+    )
     # Append-only merge: the existing edge table is never shuffled in
     # the normal regime.
     # 1. dedup WITHIN the (small) delta;

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from ontoea_spark.pipeline.extract import extract_mentions, extract_pages_text
 
@@ -90,12 +91,22 @@ def run_available_now(
     """Drain everything currently available into an in-memory sink
     (test/bootstrap mode); production would writeStream to parquet/Kafka
     with the same checkpointLocation for resume."""
-    q = (
+    _available_now(
         stream_df.writeStream.format("memory")
         .queryName(table_name)
-        .outputMode(output_mode)
-        .option("checkpointLocation", checkpoint_dir)
+        .outputMode(output_mode),
+        checkpoint_dir,
+    )
+
+
+def _available_now(writer: DataStreamWriter, checkpoint_dir: str) -> StreamingQuery:
+    """Start ``writer`` resumable from ``checkpoint_dir`` with an
+    availableNow trigger (drain everything currently present, then
+    stop) and wait for it to terminate."""
+    q = (
+        writer.option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
+    return q

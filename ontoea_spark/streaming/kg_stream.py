@@ -12,27 +12,35 @@ deviation from the batch interleave — but the decoded (s, p, o, kg)
 edge set is identical; asserted by tests/test_streaming.py).
 
 State layout (the Iceberg-append analogue this sandbox can express in
-plain parquet): each micro-batch commits ONLY ITS DELTA —
-``{state_dir}/v{batch_id}/{ent_ids,rel_ids,edges}`` holds the NEW
-dictionary rows (ids above the parent's max — the frozen-append
-contract makes "new" a cheap id-range filter) and the NOVEL edges
-(``incremental_update`` already computes them for the anti-join merge).
-A batch's write cost is O(delta), never O(graph) — at 10^12 documents a
-full-table rewrite per micro-batch would be the scale killer. Reading
-state = union of committed deltas at or below a version (Iceberg's
-manifest-of-files, literally). foreachBatch may REPLAY a batch after a
-crash; delta dirs keyed by batch_id make the retry idempotent — a
-replayed batch re-reads deltas strictly below its own id and overwrites
-only its own. Long streams compact old deltas exactly as Iceberg
-compacts manifests; compaction changes file layout, not content.
+plain parquet): ONE versioned-delta log, shared by the KG state, the
+host graph, the canonical insert/delete log and the corpus profile,
+which differ only in their merge. Each micro-batch commits ONLY ITS
+DELTA as ``{state_dir}/v{batch_id}/{table}/`` (for the KG: the NEW
+dictionary rows — ids above the parent's max — and the NOVEL edges), so
+a batch's write cost is O(delta), never O(graph) — at 10^12 documents a
+full-table rewrite per micro-batch would be the scale killer. A version
+counts once every table carries its parquet ``_SUCCESS`` marker.
+Reading state = the family's merge over one multi-path scan per table
+of the committed versions (Iceberg's manifest-of-files, literally).
+foreachBatch may REPLAY a batch after a crash; a replayed batch re-reads
+versions strictly below its own id and overwrites only its own, so the
+retry is idempotent. Compaction rewrites the merged view as one version
+(layout changes, content does not). Listing, ``_SUCCESS`` checks,
+delete and rename go through the Hadoop FileSystem API
+(``pipeline.checkpoint._HadoopFS``), so a ``file://``/``hdfs://`` state
+dir behaves like a local path.
 """
 
 from __future__ import annotations
 
-import os
+import functools
+import posixpath
+from collections.abc import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from ontoea_spark.pipeline.checkpoint import _HadoopFS
 
 ENT_SCHEMA = "kg long, elem string, freq long, rank long, id long"
 REL_SCHEMA = ENT_SCHEMA
@@ -41,25 +49,113 @@ EDGE_SCHEMA = "s_id long, p_id long, o_id long, kg long"
 _STATE_TABLES = ("ent_ids", "rel_ids", "edges")
 
 
+# ---------------------------------------------------------------------------
+# the versioned-delta log
+# ---------------------------------------------------------------------------
+
+
+def _version_dir(state_dir: str, v: int) -> str:
+    return posixpath.join(state_dir, f"v{v}")
+
+
+def _union(*frames: DataFrame) -> tuple[DataFrame, ...]:
+    """The KG state's merge. A family's merge maps the per-table scans of
+    committed versions to the merged view in the tables' own schema,
+    which compaction writes back as one version."""
+    return frames
+
+
 def _committed_versions(
     state_dir: str, tables: tuple[str, ...] = _STATE_TABLES
 ) -> list[int]:
     """Versions whose LAST table write finished (parquet _SUCCESS marker
     on every table — a half-written snapshot from a crashed batch is
     invisible and its replay overwrites it)."""
-    if not os.path.isdir(state_dir):
+    fs = _HadoopFS(SparkSession.active(), state_dir)
+    if not fs.exists(state_dir):
         return []
-    out = []
-    for name in os.listdir(state_dir):
-        if not name.startswith("v"):
-            continue
-        base = os.path.join(state_dir, name)
-        if all(
-            os.path.exists(os.path.join(base, t, "_SUCCESS"))
+    return sorted(
+        int(name[1:])
+        for name in fs.listdir(state_dir)
+        if name.startswith("v")
+        and all(
+            fs.exists(posixpath.join(state_dir, name, t, "_SUCCESS"))
             for t in tables
-        ):
-            out.append(int(name[1:]))
-    return sorted(out)
+        )
+    )
+
+
+def _read(
+    spark,
+    state_dir: str,
+    tables: tuple[str, ...],
+    merge: Callable[..., tuple[DataFrame, ...]] = _union,
+    before: int | None = None,
+) -> tuple[DataFrame, ...] | None:
+    """``merge`` over one multi-path parquet scan per table of the
+    committed versions (only those < ``before`` when given) — the union
+    is file listing, not a shuffle. None if there are none."""
+    versions = _committed_versions(state_dir, tables)
+    if before is not None:
+        versions = [v for v in versions if v < before]
+    if not versions:
+        return None
+    dirs = [_version_dir(state_dir, v) for v in versions]
+    return merge(
+        *(spark.read.parquet(*[posixpath.join(d, t) for d in dirs]) for t in tables)
+    )
+
+
+def _commit(base: str, **frames: DataFrame) -> None:
+    """Write ``table=frame`` under ``base``: a version dir (a replayed
+    batch overwrites its own) or compaction's staging dir."""
+    for table, df in frames.items():
+        df.write.mode("overwrite").parquet(posixpath.join(base, table))
+
+
+def _compact(
+    spark,
+    state_dir: str,
+    tables: tuple[str, ...],
+    merge: Callable[..., tuple[DataFrame, ...]] = _union,
+) -> int:
+    """Rewrite the merged view as one version under the current max id:
+    write ``_compact_v{vmax}`` -> drop every committed version -> rename.
+    Returns the compacted version id."""
+    versions = _committed_versions(state_dir, tables)
+    if not versions:
+        raise ValueError(f"no committed {'/'.join(tables)} state under {state_dir}")
+    vmax = versions[-1]
+    tmp = posixpath.join(state_dir, f"_compact_v{vmax}")
+    merged = _read(spark, state_dir, tables, merge, before=vmax + 1)
+    _commit(tmp, **dict(zip(tables, merged)))
+    fs = _HadoopFS(spark, state_dir)
+    for v in versions:
+        fs.delete(_version_dir(state_dir, v))
+    fs.rename(tmp, _version_dir(state_dir, vmax))
+    return vmax
+
+
+def _drain_pages(
+    spark,
+    pages_path: str,
+    checkpoint_dir: str,
+    max_files_per_trigger: int,
+    fold: Callable[[DataFrame, int], None],
+):
+    """Run ``fold(batch_df, batch_id)`` over every pages file currently
+    under ``pages_path`` (availableNow) and return the terminated query."""
+    from ontoea_spark.streaming.ingest import _available_now, read_pages_stream
+
+    stream = read_pages_stream(
+        spark, pages_path, max_files_per_trigger=max_files_per_trigger
+    )
+    return _available_now(stream.writeStream.foreachBatch(fold), checkpoint_dir)
+
+
+# ---------------------------------------------------------------------------
+# streaming KG state (the flagship graph)
+# ---------------------------------------------------------------------------
 
 
 def read_kg_state(
@@ -70,20 +166,7 @@ def read_kg_state(
     must read strictly below its own id, never its own half-committed
     delta). None if no snapshot exists yet. One multi-path parquet scan
     per table — the union is file listing, not a shuffle."""
-    versions = _committed_versions(state_dir)
-    if before is not None:
-        versions = [v for v in versions if v < before]
-    if not versions:
-        return None
-    return tuple(
-        spark.read.parquet(
-            *[
-                os.path.join(state_dir, f"v{v}", t)
-                for v in versions
-            ]
-        )
-        for t in _STATE_TABLES
-    )
+    return _read(spark, state_dir, _STATE_TABLES, before=before)
 
 
 def _empty_state(spark) -> tuple[DataFrame, DataFrame, DataFrame]:
@@ -120,13 +203,12 @@ def ingest_pages_batch(
         triples,
         F.col("kgn"),
     )
-    base = os.path.join(state_dir, f"v{batch_id}")
-    for name, df in (
-        ("ent_ids", inc.ent_ids.filter(F.col("id") > ent_max)),
-        ("rel_ids", inc.rel_ids.filter(F.col("id") > rel_max)),
-        ("edges", inc.novel_edges),
-    ):
-        df.write.mode("overwrite").parquet(os.path.join(base, name))
+    _commit(
+        _version_dir(state_dir, batch_id),
+        ent_ids=inc.ent_ids.filter(F.col("id") > ent_max),
+        rel_ids=inc.rel_ids.filter(F.col("id") > rel_max),
+        edges=inc.novel_edges,
+    )
 
 
 def streaming_kg_build(
@@ -140,23 +222,10 @@ def streaming_kg_build(
     availableNow trigger (drains everything currently present, then
     stops — the bounded-source test mode; a production crawl drops the
     trigger and runs forever). Returns the terminated query."""
-    from ontoea_spark.streaming.ingest import read_pages_stream
-
-    stream = read_pages_stream(
-        spark, pages_path, max_files_per_trigger=max_files_per_trigger
-    )
-
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         ingest_pages_batch(batch_df, spark, state_dir, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain_pages(spark, pages_path, checkpoint_dir, max_files_per_trigger, fold)
 
 
 def compact_kg_state(spark, state_dir: str) -> int:
@@ -172,20 +241,7 @@ def compact_kg_state(spark, state_dir: str) -> int:
     directories (write merged -> remove old -> rename), which is not
     atomic end-to-end; production Iceberg expresses this as a single
     snapshot commit. Run it as stop-the-world maintenance here."""
-    import shutil
-
-    versions = _committed_versions(state_dir)
-    if not versions:
-        raise ValueError(f"no committed state under {state_dir}")
-    vmax = versions[-1]
-    state = read_kg_state(spark, state_dir)
-    tmp = os.path.join(state_dir, f"_compact_v{vmax}")
-    for name, df in zip(_STATE_TABLES, state):
-        df.write.mode("overwrite").parquet(os.path.join(tmp, name))
-    for v in versions:
-        shutil.rmtree(os.path.join(state_dir, f"v{v}"))
-    os.rename(tmp, os.path.join(state_dir, f"v{vmax}"))
-    return vmax
+    return _compact(spark, state_dir, _STATE_TABLES)
 
 
 def decoded_edges(
@@ -237,6 +293,14 @@ def decoded_edges(
 _HOST_TABLES = ("host_edges",)
 
 
+def _merge_host(host_edges: DataFrame) -> tuple[DataFrame]:
+    return (
+        host_edges.groupBy("src_host", "dst_host").agg(
+            F.sum("n_links").cast("long").alias("n_links")
+        ),
+    )
+
+
 def ingest_links_batch(pages: DataFrame, state_dir: str, batch_id: int) -> None:
     """foreachBatch body for the streaming host link graph: this batch's
     pages -> href anchors -> host-edge PARTIAL counts, committed as the
@@ -251,9 +315,9 @@ def ingest_links_batch(pages: DataFrame, state_dir: str, batch_id: int) -> None:
     falls out of the versioned-delta layout)."""
     from ontoea_spark.pipeline.weblinks import extract_links, host_link_graph
 
-    g = host_link_graph(extract_links(pages))
-    g.write.mode("overwrite").parquet(
-        os.path.join(state_dir, f"v{batch_id}", "host_edges")
+    _commit(
+        _version_dir(state_dir, batch_id),
+        host_edges=host_link_graph(extract_links(pages)),
     )
 
 
@@ -262,17 +326,8 @@ def read_host_graph(
 ) -> DataFrame | None:
     """Merged host graph = groupBy-sum over committed partial-count
     deltas (one multi-path scan). None if nothing is committed yet."""
-    versions = _committed_versions(state_dir, tables=_HOST_TABLES)
-    if before is not None:
-        versions = [v for v in versions if v < before]
-    if not versions:
-        return None
-    df = spark.read.parquet(
-        *[os.path.join(state_dir, f"v{v}", "host_edges") for v in versions]
-    )
-    return df.groupBy("src_host", "dst_host").agg(
-        F.sum("n_links").cast("long").alias("n_links")
-    )
+    state = _read(spark, state_dir, _HOST_TABLES, _merge_host, before)
+    return None if state is None else state[0]
 
 
 def streaming_host_graph(
@@ -288,23 +343,10 @@ def streaming_host_graph(
     host_link_graph(extract_links(pages)) counts — addition is
     arrival-order-free, so there is no incremental deviation at all
     (asserted by tests/test_streaming.py)."""
-    from ontoea_spark.streaming.ingest import read_pages_stream
-
-    stream = read_pages_stream(
-        spark, pages_path, max_files_per_trigger=max_files_per_trigger
-    )
-
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         ingest_links_batch(batch_df, state_dir, batch_id)
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain_pages(spark, pages_path, checkpoint_dir, max_files_per_trigger, fold)
 
 
 def compact_host_graph(spark, state_dir: str) -> int:
@@ -312,19 +354,7 @@ def compact_host_graph(spark, state_dir: str) -> int:
     delta under the current max version id (stop-the-world maintenance,
     same contract as compact_kg_state). The merged view is unchanged:
     read-time groupBy-sum over one pre-summed delta is the identity."""
-    import shutil
-
-    versions = _committed_versions(state_dir, tables=_HOST_TABLES)
-    if not versions:
-        raise ValueError(f"no committed host-graph state under {state_dir}")
-    vmax = versions[-1]
-    merged = read_host_graph(spark, state_dir)
-    tmp = os.path.join(state_dir, f"_compact_v{vmax}")
-    merged.write.mode("overwrite").parquet(os.path.join(tmp, "host_edges"))
-    for v in versions:
-        shutil.rmtree(os.path.join(state_dir, f"v{v}"))
-    os.rename(tmp, os.path.join(state_dir, f"v{vmax}"))
-    return vmax
+    return _compact(spark, state_dir, _HOST_TABLES, _merge_host)
 
 
 # ---------------------------------------------------------------------------
@@ -347,33 +377,33 @@ TRIPLE_LOG_SCHEMA = "s string, p string, o string, op string, v long"
 MAP_LOG_SCHEMA = "entity string, canonical string, v long"
 
 
+def _merge_canonical(
+    triple_log: DataFrame, map_log: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """The log's live rows: the latest op per (s,p,o) with tombstones
+    dropped, the latest canonical per entity (each stamped with its
+    version, so compaction leaves a valid log)."""
+    return (
+        triple_log.groupBy("s", "p", "o")
+        .agg(F.max_by("op", "v").alias("op"), F.max("v").alias("v"))
+        .filter(F.col("op") == "insert"),
+        map_log.groupBy("entity").agg(
+            F.max_by("canonical", "v").alias("canonical"), F.max("v").alias("v")
+        ),
+    )
+
+
 def read_canonical_state(
     spark, state_dir: str, before: int | None = None
 ) -> tuple[DataFrame, DataFrame] | None:
     """(triples, mapping) from the log: the latest op per (s,p,o) wins
     (a delete tombstone drops the row), the latest canonical per entity
     wins. None before the first commit."""
-    versions = _committed_versions(state_dir, tables=_CANON_TABLES)
-    if before is not None:
-        versions = [v for v in versions if v < before]
-    if not versions:
+    state = _read(spark, state_dir, _CANON_TABLES, _merge_canonical, before)
+    if state is None:
         return None
-    tl = spark.read.parquet(
-        *[os.path.join(state_dir, f"v{v}", "triple_log") for v in versions]
-    )
-    ml = spark.read.parquet(
-        *[os.path.join(state_dir, f"v{v}", "map_log") for v in versions]
-    )
-    triples = (
-        tl.groupBy("s", "p", "o")
-        .agg(F.max_by("op", "v").alias("op"))
-        .filter(F.col("op") == "insert")
-        .select("s", "p", "o")
-    )
-    mapping = ml.groupBy("entity").agg(
-        F.max_by("canonical", "v").alias("canonical")
-    )
-    return triples, mapping
+    triples, mapping = state
+    return triples.select("s", "p", "o"), mapping.select("entity", "canonical")
 
 
 def ingest_canonical_stream_batch(
@@ -414,17 +444,15 @@ def ingest_canonical_stream_batch(
             d.retracted_triples,
             d.changed_map_rows,
         )
+    v = F.lit(batch_id).cast("long")
     try:
-        base = os.path.join(state_dir, f"v{batch_id}")
-        log = novel.withColumn("op", F.lit("insert")).unionByName(
-            retracted.withColumn("op", F.lit("delete"))
+        _commit(
+            _version_dir(state_dir, batch_id),
+            triple_log=novel.withColumn("op", F.lit("insert"))
+            .unionByName(retracted.withColumn("op", F.lit("delete")))
+            .withColumn("v", v),
+            map_log=changed_map.withColumn("v", v),
         )
-        log.withColumn("v", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(base, "triple_log"))
-        changed_map.withColumn("v", F.lit(batch_id).cast("long")).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(base, "map_log"))
     finally:
         if cur_t is not None:
             cur_t.unpersist()
@@ -435,24 +463,7 @@ def compact_canonical_state(spark, state_dir: str) -> int:
     (Iceberg's MoR compaction): read the merged view, rewrite it as a
     single delta under the current max version, drop the rest. The
     merged view is unchanged by construction."""
-    import shutil
-
-    versions = _committed_versions(state_dir, tables=_CANON_TABLES)
-    if not versions:
-        raise ValueError(f"no committed canonical state under {state_dir}")
-    vmax = versions[-1]
-    triples, mapping = read_canonical_state(spark, state_dir)
-    tmp = os.path.join(state_dir, f"_compact_v{vmax}")
-    triples.withColumn("op", F.lit("insert")).withColumn(
-        "v", F.lit(vmax).cast("long")
-    ).write.mode("overwrite").parquet(os.path.join(tmp, "triple_log"))
-    mapping.withColumn("v", F.lit(vmax).cast("long")).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(tmp, "map_log"))
-    for v in versions:
-        shutil.rmtree(os.path.join(state_dir, f"v{v}"))
-    os.rename(tmp, os.path.join(state_dir, f"v{vmax}"))
-    return vmax
+    return _compact(spark, state_dir, _CANON_TABLES, _merge_canonical)
 
 
 # ---------------------------------------------------------------------------
@@ -474,6 +485,21 @@ def compact_canonical_state(spark, state_dir: str) -> int:
 _PROFILE_TABLES = ("kmv_minima", "cms_cells")
 
 
+def _merge_profile(
+    key_cols: tuple[str, ...], k: int, kmv_minima: DataFrame, cms_cells: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    return (
+        kmv_minima.groupBy(*key_cols).agg(
+            F.slice(
+                F.array_sort(F.array_distinct(F.flatten(F.collect_list("minima")))),
+                1,
+                k,
+            ).alias("minima")
+        ),
+        cms_cells.groupBy("row", "col").agg(F.sum("cnt").cast("long").alias("cnt")),
+    )
+
+
 def ingest_profile_batch(
     df: DataFrame,
     state_dir: str,
@@ -489,12 +515,10 @@ def ingest_profile_batch(
     its own version — idempotent)."""
     from ontoea_spark.operators.sketches import cms_sketch, kmv_sketch
 
-    base = os.path.join(state_dir, f"v{batch_id}")
-    kmv_sketch(df, list(key_cols), value_col, k).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(base, "kmv_minima"))
-    cms_sketch(df, value_col, d, w).write.mode("overwrite").parquet(
-        os.path.join(base, "cms_cells")
+    _commit(
+        _version_dir(state_dir, batch_id),
+        kmv_minima=kmv_sketch(df, list(key_cols), value_col, k),
+        cms_cells=cms_sketch(df, value_col, d, w),
     )
 
 
@@ -509,34 +533,8 @@ def read_profile(
     k smallest of the union of the batch minima (collect_list state is
     bounded at k * n_versions per key; compaction resets it), CMS is the
     host-graph groupBy-sum. None if nothing committed yet."""
-    versions = _committed_versions(state_dir, tables=_PROFILE_TABLES)
-    if before is not None:
-        versions = [v for v in versions if v < before]
-    if not versions:
-        return None
-    kmv = (
-        spark.read.parquet(
-            *[os.path.join(state_dir, f"v{v}", "kmv_minima") for v in versions]
-        )
-        .groupBy(*key_cols)
-        .agg(
-            F.slice(
-                F.array_sort(
-                    F.array_distinct(F.flatten(F.collect_list("minima")))
-                ),
-                1,
-                k,
-            ).alias("minima")
-        )
-    )
-    cms = (
-        spark.read.parquet(
-            *[os.path.join(state_dir, f"v{v}", "cms_cells") for v in versions]
-        )
-        .groupBy("row", "col")
-        .agg(F.sum("cnt").cast("long").alias("cnt"))
-    )
-    return kmv, cms
+    merge = functools.partial(_merge_profile, key_cols, k)
+    return _read(spark, state_dir, _PROFILE_TABLES, merge, before)
 
 
 def streaming_corpus_profile(
@@ -553,12 +551,6 @@ def streaming_corpus_profile(
     distinct-URL KMV + URL-frequency CMS (recrawl hot-key detector),
     maintained per micro-batch at O(batch) cost. availableNow drain for
     the bounded test mode; a production crawl runs unbounded."""
-    from ontoea_spark.streaming.ingest import read_pages_stream
-
-    stream = read_pages_stream(
-        spark, pages_path, max_files_per_trigger=max_files_per_trigger
-    )
-
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         ingest_profile_batch(
             batch_df.select("lang", "url"),
@@ -571,14 +563,7 @@ def streaming_corpus_profile(
             w,
         )
 
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return _drain_pages(spark, pages_path, checkpoint_dir, max_files_per_trigger, fold)
 
 
 def compact_profile(
@@ -588,17 +573,5 @@ def compact_profile(
     maintenance, same contract as compact_host_graph): semilattice and
     monoid merges are idempotent/associative, so re-reading the single
     compacted delta reproduces the merged view exactly."""
-    import shutil
-
-    versions = _committed_versions(state_dir, tables=_PROFILE_TABLES)
-    if not versions:
-        raise ValueError(f"no committed profile state under {state_dir}")
-    vmax = versions[-1]
-    kmv, cms = read_profile(spark, state_dir, key_cols, k)
-    tmp = os.path.join(state_dir, f"_compact_v{vmax}")
-    kmv.write.mode("overwrite").parquet(os.path.join(tmp, "kmv_minima"))
-    cms.write.mode("overwrite").parquet(os.path.join(tmp, "cms_cells"))
-    for v in versions:
-        shutil.rmtree(os.path.join(state_dir, f"v{v}"))
-    os.rename(tmp, os.path.join(state_dir, f"v{vmax}"))
-    return vmax
+    merge = functools.partial(_merge_profile, key_cols, k)
+    return _compact(spark, state_dir, _PROFILE_TABLES, merge)
